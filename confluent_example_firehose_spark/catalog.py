@@ -9,11 +9,11 @@ viable at 100 TB (partition pruning + column pruning happen before IO).
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schema import TABLE_NAMES
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -44,11 +44,16 @@ def _session_uuid(spark: SparkSession) -> str:
     sessions sharing one context (spark.newSession()) must not share
     memoized relations — a DataFrame is bound to the session that built
     it, so createOrReplaceTempView / session-conf-sensitive analysis
-    would otherwise follow the wrong session's catalog."""
+    would otherwise follow the wrong session's catalog. Without a JVM
+    UUID the wrapper carries its own token: id() would be reused by a
+    new session once the old one is garbage-collected."""
     try:
         return str(spark._jsparkSession.sessionUUID())
     except Exception:
-        return str(id(spark))
+        tok = getattr(spark, "_graft_session_token", None)
+        if tok is None:
+            tok = spark._graft_session_token = uuid.uuid4().hex
+        return tok
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -102,15 +107,3 @@ def _load_table_uncached(
         elif t == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each table as a temp view (for the SQL API surface)."""
-    tables = load_all(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables

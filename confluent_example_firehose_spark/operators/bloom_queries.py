@@ -19,11 +19,9 @@ brief's mergeable-sketch mandate.
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 import tempfile
-import time
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -291,6 +289,13 @@ def q_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds M rows no matter how many epochs merge into it — the
     incremental build costs the same as the batch build, paid as you
     ingest."""
+    from .sketch_stream_queries import (
+        LAST_STATE_ROWS,
+        compact_state,
+        run_epochs,
+        stage_key_batches,
+    )
+
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
@@ -302,31 +307,11 @@ def q_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every invocation (bench reruns, oracle checks, tests) leaks one
     # corpus to /tmp.
     try:
-        stage = os.path.join(root, "in")
+        stage = stage_key_batches(d, root, BLOOM_BATCHES, key="doc_id")
         state = os.path.join(root, "state")
-        os.makedirs(stage)
-        for k in range(BLOOM_BATCHES):
-            tmp = os.path.join(root, f"tmp{k}")
-            d.filter(F.col("doc_id") % BLOOM_BATCHES == k).coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            shutil.move(part, os.path.join(stage, f"b{k}.parquet"))
-        base = time.time()
-        for k in range(BLOOM_BATCHES):
-            p = os.path.join(stage, f"b{k}.parquet")
-            os.utime(p, (base + k, base + k))
-
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
         log: list[tuple[int, int]] = []
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            from .sketch_stream_queries import compact_state
-
+        def per_batch(batch_df: DataFrame, b: int, _group) -> None:
             s = batch_df.sparkSession
             bits = batch_df.select(
                 F.explode(_positions(F.col("fp"))).alias("pos")
@@ -339,17 +324,11 @@ def q_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # shape claim below physically true on disk).
             compact_state(s.read.parquet(state).distinct(), state)
             n_cum = s.read.parquet(state).count()
-            log.append((len(log), n_cum))
+            log.append((b, n_cum))
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_epochs(
+            spark, stage, d.schema, os.path.join(root, "ckpt"), per_batch
         )
-        q.awaitTermination()
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
         LAST_STATE_ROWS["q_bloom_stream"] = (
             spark.read.parquet(state).count()
         )

@@ -203,13 +203,18 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds CMS_D x CMS_W rows after compaction (bounded at ANY corpus
     size), so incremental build costs what the batch build costs,
     paid as you ingest."""
-    import glob
     import os
     import shutil
     import tempfile
-    import time
 
     from pyspark.sql import types as T
+
+    from .sketch_stream_queries import (
+        LAST_STATE_ROWS,
+        compact_state,
+        run_epochs,
+        stage_key_batches,
+    )
 
     d = (
         load_table(spark, sf_dir, "documents")
@@ -218,31 +223,11 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = tempfile.mkdtemp(prefix="cms_stream_")
     try:
-        stage = os.path.join(root, "in")
+        stage = stage_key_batches(d, root, CMS_BATCHES, key="doc_id")
         state = os.path.join(root, "state")
-        os.makedirs(stage)
-        for k in range(CMS_BATCHES):
-            tmp = os.path.join(root, f"tmp{k}")
-            d.filter(F.col("doc_id") % CMS_BATCHES == k).coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            shutil.move(part, os.path.join(stage, f"b{k}.parquet"))
-        base = time.time()
-        for k in range(CMS_BATCHES):
-            p = os.path.join(stage, f"b{k}.parquet")
-            os.utime(p, (base + k, base + k))
-
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
         log: list[tuple[int, int, int]] = []
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            from .sketch_stream_queries import compact_state
-
+        def per_batch(batch_df: DataFrame, b: int, _group) -> None:
             s = batch_df.sparkSession
             cells = cms_sketch(
                 batch_df.groupBy("term").agg(F.count("*").alias("cnt"))
@@ -270,17 +255,11 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.countDistinct("r", "pos").alias("nc"),
                 F.coalesce(F.sum("c"), F.lit(0)).alias("mass"),
             ).first()
-            log.append((len(log), agg["nc"], agg["mass"]))
+            log.append((b, agg["nc"], agg["mass"]))
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_epochs(
+            spark, stage, d.schema, os.path.join(root, "ckpt"), per_batch
         )
-        q.awaitTermination()
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
         LAST_STATE_ROWS["q_cms_stream"] = (
             spark.read.parquet(state).count()
         )

@@ -86,8 +86,10 @@ def connected_components(
         # init checkpoint now materializes inside round 1's aggregate —
         # one fewer job per invocation (per EPOCH in the streaming
         # kernels). The only shape that pays more is an edgeless graph
-        # (one confirming round instead of zero); the streaming caller
-        # already short-circuits that case before calling.
+        # (one confirming round instead of zero); _cluster_epoch skips
+        # the call only for an epoch with no verified pairs, so pairs
+        # that all fall inside one existing root still pay that round.
+        # An empty node set sums to NULL: converged after one round.
         labels = nodes.select(F.col("id"), F.col("id").alias("comp"))
         labels = labels.localCheckpoint(eager=False)
         prev_sum = None
@@ -102,7 +104,7 @@ def connected_components(
             )
             labels = labels.localCheckpoint(eager=False)
             cur_sum = labels.agg(F.sum("comp")).first()[0]
-            if prev_sum is not None and cur_sum == prev_sum:
+            if cur_sum is None or cur_sum == prev_sum:
                 converged = True
                 break
             prev_sum = cur_sum

@@ -32,8 +32,9 @@ from .dedup import (
     words,
 )
 from .sketch_stream_queries import (
+    LAST_STATE_ROWS,
     SK_BATCHES,
-    run_concurrent,
+    run_epochs,
     stage_key_batches,
 )
 
@@ -394,19 +395,13 @@ def _lazy_pbs(df: DataFrame, col):
     return get
 
 
-# Overlap runner for independent per-epoch maintenance jobs (guide
-# §2.6) — shared with the batch staging writer, defined beside it.
-_run_concurrent = run_concurrent
-
-
 def _index_epoch(
     s: SparkSession,
     b: int,
     flt: DataFrame,
     ip: dict[str, str],
     meter: str,
-    executor=None,
-    pending: list | None = None,
+    group,
 ) -> tuple[DataFrame, DataFrame, DataFrame, list[DataFrame], list[int]]:
     """ONE epoch of contracted-LSH index maintenance — the
     q_dedup_near_stream kernel, extracted in r12 so the duplicate-
@@ -446,14 +441,11 @@ def _index_epoch(
     orientations), internal persists the caller must unpersist, and the
     batch's cfp bucket list for the caller's own pruned lookups.
 
-    `executor`/`pending` (optimization r14, guide §2.6): when a caller
-    passes a thread-pool executor and a list, the five state-relation
-    maintenance pipelines (append -> compaction, see below) are
-    SUBMITTED to it and their futures appended to `pending` instead of
-    being awaited here — the caller overlaps them with its own
-    index-independent work and joins them before anything re-reads the
-    index relations. With executor=None the pipelines still overlap
-    each other on a local pool but are fully joined before return."""
+    The five state-relation maintenance pipelines (append ->
+    compaction, see below) are SUBMITTED to the caller's OverlapGroup
+    `group`, not awaited here: the caller overlaps them with its own
+    index-independent work and must join the group before anything
+    re-reads the index relations."""
     rows_per_band = NEAR_STREAM_HASHES // NEAR_STREAM_BANDS
     members_b = (
         flt.select("doc_id", "cfp").withColumn("b_id", F.lit(b))
@@ -623,13 +615,7 @@ def _index_epoch(
     # buckets for bands, and the pair frame's own cfp buckets for
     # class_pairs (its appended rows carry OLD-side cfps outside the
     # batch); below it the full-dir listdir sweep is the cheap path,
-    # same stance as _pruned_scan. `executor`/`pending` (cluster /
-    # ingest callers): the pipelines are submitted to the CALLER's
-    # pool and their futures appended to `pending` — the caller joins
-    # them after its own index-independent work (delta CC + state
-    # rewrites read only checkpointed/persisted epoch frames and the
-    # roots/comp relations, never the five index paths), and MUST
-    # join before anything re-reads or compacts the index relations.
+    # same stance as _pruned_scan.
     def _maintain(rel: str, df: DataFrame, key_pbs) -> None:
         _pb_append(df, ip[rel])
         pbs = (
@@ -639,49 +625,42 @@ def _index_epoch(
         )
         _compact_buckets(s, ip[rel], pbs, f"{meter}_{rel}_compact")
 
-    jobs = [
-        (lambda rel=rel, df=df, kp=kp: _maintain(rel, df, kp))
-        for rel, df, kp in (
-            (
-                "members",
-                members_b.withColumn("pb", _pb(F.col("cfp"))),
-                batch_pbs,
+    for rel, df, kp in (
+        (
+            "members",
+            members_b.withColumn("pb", _pb(F.col("cfp"))),
+            batch_pbs,
+        ),
+        (
+            "bands",
+            bands_n.withColumn("b_id", F.lit(b)).withColumn(
+                "pb", _pb(F.col("band_id"), F.col("band_hash"))
             ),
-            (
-                "bands",
-                bands_n.withColumn("b_id", F.lit(b)).withColumn(
-                    "pb", _pb(F.col("band_id"), F.col("band_hash"))
-                ),
-                band_pbs,
+            band_pbs,
+        ),
+        (
+            "shingles",
+            sh_n.withColumn("b_id", F.lit(b)).withColumn(
+                "pb", _pb(F.col("cfp"))
             ),
-            (
-                "shingles",
-                sh_n.withColumn("b_id", F.lit(b)).withColumn(
-                    "pb", _pb(F.col("cfp"))
-                ),
-                batch_pbs,
+            batch_pbs,
+        ),
+        (
+            "classes",
+            new_cls.select("cfp", "rep_id")
+            .withColumn("b_id", F.lit(b))
+            .withColumn("pb", _pb(F.col("cfp"))),
+            batch_pbs,
+        ),
+        (
+            "class_pairs",
+            cp_new.withColumn("b_id", F.lit(b)).withColumn(
+                "pb", _pb(F.col("cfp"))
             ),
-            (
-                "classes",
-                new_cls.select("cfp", "rep_id")
-                .withColumn("b_id", F.lit(b))
-                .withColumn("pb", _pb(F.col("cfp"))),
-                batch_pbs,
-            ),
-            (
-                "class_pairs",
-                cp_new.withColumn("b_id", F.lit(b)).withColumn(
-                    "pb", _pb(F.col("cfp"))
-                ),
-                _lazy_pbs(cp_new, _pb(F.col("cfp"))),
-            ),
-        )
-    ]
-    if executor is None:
-        _run_concurrent(jobs)
-    else:
-        assert pending is not None, "executor requires a pending list"
-        pending.extend(executor.submit(j) for j in jobs)
+            _lazy_pbs(cp_new, _pb(F.col("cfp"))),
+        ),
+    ):
+        group.submit(lambda rel=rel, df=df, kp=kp: _maintain(rel, df, kp))
     return (
         members_b,
         new_cls,
@@ -809,30 +788,24 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage = stage_key_batches(d, root, SK_BATCHES, key="doc_id")
         ip = _index_paths(root)
         ledger = os.path.join(root, "ledger")
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int, group) -> None:
             s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
             _assert_batch_membership(batch_df, b)
             # Shingleable docs only (>= 3 words) — the population the
             # oracle's len(ws) >= 3 filter keeps.
             flt = batch_df.filter(F.size(words("text")) >= 3).select(
                 "doc_id", "text", F.md5("text").alias("cfp")
             )
-            # Index maintenance is the shared kernel (_index_epoch);
-            # its state appends are epoch-tagged, so the reads below
-            # (all filtered b_id < b) see exactly the strictly-earlier
-            # arrivals even though the appends already happened.
             members_b, new_cls, cp_new, extra, batch_pbs = _index_epoch(
-                s, b, flt, ip, meter="q_dedup_near_stream"
+                s, b, flt, ip, "q_dedup_near_stream", group
             )
+            # Joined before the emission re-reads members/class_pairs:
+            # a compaction sweep may swap a bucket dir under the scan.
+            # The appends are epoch-tagged, so the reads below (all
+            # filtered b_id < b) still see exactly the strictly-earlier
+            # arrivals.
+            group.join()
             # Emission: same-class pairs are jac = 1.0 by identity;
             # cross-class pairs inherit the class pair's Jaccard. Both
             # member lookups are bucket-pruned — batch-cfp buckets for
@@ -893,13 +866,9 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             for c in (members_b, new_cls, cp_new, *extra):
                 c.unpersist()
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_epochs(
+            spark, stage, d.schema, os.path.join(root, "ckpt"), per_batch
         )
-        q.awaitTermination()
         # Index-state size laws (the family's LAST_STATE_ROWS
         # instrumentation), r11 contracted form: the member map is
         # LINEAR in the corpus (3 narrow columns, never text); the
@@ -907,8 +876,6 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # class) and shingle sets (one per class) — scale with CONTENT
         # DIVERSITY; class pairs are 2x the verified near-dup class
         # relationships. Pinned by tests/test_dedup_stream.
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
         for rel in (
             "members", "classes", "bands", "shingles", "class_pairs"
         ):
@@ -929,6 +896,25 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return out
+
+
+def _quality_ok(ws) -> F.Column:
+    """q_corpus_curation's quality gate over a word array `ws`
+    (words(text)): non-null text, >= 5 words, stopword density >= 0.05,
+    type-token ratio >= 0.3 — the one definition shared by
+    q_curation_stream's census and admission and q_ingest_stream's
+    gate. Quality is a pure function of text, so every member of a
+    content class passes or fails together."""
+    from .text_queries import STOPWORDS
+
+    n = F.size(ws)
+    stop = F.filter(ws, lambda w: w.isin(*[F.lit(x) for x in STOPWORDS]))
+    return (
+        ws.isNotNull()
+        & (n >= 5)
+        & (F.size(stop).cast("double") / n >= 0.05)
+        & (F.size(F.array_distinct(ws)).cast("double") / n >= 0.3)
+    )
 
 
 @register(
@@ -1014,18 +1000,10 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AbstractPrometheusFirehose.java:41-51, lazy series creation)
     generalized from metric keys to document content, on its
     micro-batch boundaries (AbstractFirehose.java:107-131)."""
-    import os
     import shutil
     import tempfile
 
     from pyspark.sql import types as T
-
-    from .dedup import words
-    from .sketch_stream_queries import (
-        LAST_STATE_ROWS,
-        stage_key_batches,
-    )
-    from .text_queries import STOPWORDS
 
     _clear_meters("q_curation_stream")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1033,66 +1011,17 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         stage = stage_key_batches(d, root, SK_BATCHES, key="doc_id")
         state_root = os.path.join(root, "admitted_fps")
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
         log: list[tuple[int, int, int, int, int, int]] = []
-        epoch = [0]
         cum = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int, _group) -> None:
             s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
             # Fused per-epoch census (r14, guide §2.4 job constants):
             # the membership assert, the arrival count, and the
             # quality-pass count each ran as a separate all-rows batch
             # job — one aggregate over the SAME scan computes all
             # three (assert semantics unchanged: checked over every
             # row, raised before any state is touched).
-            scored = (
-                batch_df.filter(F.col("text").isNotNull())
-                .select(F.md5("text").alias("fp"), words("text").alias("ws"))
-                .filter(F.size("ws") >= 5)
-            )
-            nw = F.size("ws").cast("long")
-            ns = F.size(
-                F.filter(
-                    F.col("ws"),
-                    lambda w: w.isin(*[F.lit(x) for x in STOPWORDS]),
-                )
-            ).cast("long")
-            nd = F.size(F.array_distinct("ws")).cast("long")
-            passed = scored.select(
-                "fp", nw.alias("nw"), ns.alias("ns"), nd.alias("nd")
-            ).filter(
-                (F.col("ns").cast("double") / F.col("nw") >= 0.05)
-                & (F.col("nd").cast("double") / F.col("nw") >= 0.3)
-            )
-            _ws = words("text")
-            _qual_ok = (
-                F.col("text").isNotNull()
-                & (F.size(_ws) >= 5)
-                & (
-                    F.size(
-                        F.filter(
-                            _ws,
-                            lambda w: w.isin(
-                                *[F.lit(x) for x in STOPWORDS]
-                            ),
-                        )
-                    ).cast("double")
-                    / F.size(_ws)
-                    >= 0.05
-                )
-                & (
-                    F.size(F.array_distinct(_ws)).cast("double")
-                    / F.size(_ws)
-                    >= 0.3
-                )
-            )
             census = batch_df.agg(
                 F.count(F.lit(1)).alias("n_arrived"),
                 F.coalesce(
@@ -1102,7 +1031,8 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit(0),
                 ).alias("mis"),
                 F.coalesce(
-                    F.sum(_qual_ok.cast("long")), F.lit(0)
+                    F.sum(_quality_ok(words("text")).cast("long")),
+                    F.lit(0),
                 ).alias("n_q"),
             ).first()
             if census["mis"]:
@@ -1114,6 +1044,9 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             n_arrived = census["n_arrived"]
             n_q = census["n_q"]
+            passed = batch_df.select(
+                F.md5("text").alias("fp"), words("text").alias("ws")
+            ).filter(_quality_ok(F.col("ws")))
             fps = (
                 passed.select("fp")
                 .distinct()
@@ -1179,13 +1112,9 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (b, n_arrived, n_arrived - n_q, n_q - n_adm, n_adm, cum[0])
             )
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_epochs(
+            spark, stage, d.schema, os.path.join(root, "ckpt"), per_batch
         )
-        q.awaitTermination()
         # Admitted-fp state == distinct admitted content: the
         # content-diversity bound, same pin family as the sketches.
         rd = _versioned_read(spark, state_root)
@@ -1270,10 +1199,21 @@ def _versioned_read(s: SparkSession, root: str) -> DataFrame | None:
 
 
 def _dir_bytes(path: str) -> int:
+    """Bytes of the data files under `path`. Skips `_`- and
+    `.`-prefixed entries (a live writer's `_temporary/` tree,
+    `_SUCCESS`, `.crc` sidecars) and tolerates files that vanish
+    mid-walk: a sibling pipeline may be committing into the same
+    relation, and its committer renames task files away."""
     total = 0
-    for base, _dirs, files in os.walk(path):
+    for base, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for fn in files:
-            total += os.path.getsize(os.path.join(base, fn))
+            if fn.startswith(("_", ".")):
+                continue
+            try:
+                total += os.path.getsize(os.path.join(base, fn))
+            except FileNotFoundError:
+                pass
     return total
 
 
@@ -1394,21 +1334,22 @@ def _cluster_epoch(
     roots_root: str,
     comp_root: str,
     meter: str,
-    executor=None,
-    pending: list | None = None,
-) -> tuple[DataFrame, list[DataFrame]]:
+) -> tuple[DataFrame, list[DataFrame], list]:
     """ONE epoch of incremental duplicate-cluster maintenance over the
     contracted LSH index's verified class pairs — the root-contracted
     delta-CC step at CLASS granularity (r12, VERDICT r11 item 1: the
     edge source is now the index the pipeline already maintains, not a
-    demo pair window). Returns (hits, caches): the batch's at-arrival
-    assignments (doc_id, cluster_id) as a LAZY output-sized frame the
-    caller must sink within the epoch (its lineage reads this epoch's
-    committed state version, which survives exactly one more epoch),
-    plus the internal persists the caller must unpersist after that
+    demo pair window). Returns (hits, caches, rewrites): the batch's
+    at-arrival assignments (doc_id, cluster_id) as a LAZY output-sized
+    frame the caller must sink within the epoch (its lineage reads this
+    epoch's committed state version, which survives exactly one more
+    epoch), the internal persists the caller must unpersist after that
     sink — the r13 shape of VERDICT r12 items 2-3: no driver collect
     here, and the caller's ledger append is the single materializing
-    action.
+    action — and the two selective state rewrites as zero-arg jobs for
+    the caller to submit to its OverlapGroup (returned, not submitted,
+    so the ingest capstone can start them after its index join) and
+    join before it unpersists the caches.
 
     State (both versioned + pb-bucketed, selectively rewritten):
       roots: (cfp, rep_id, root, pb) — one row per distinct CONTENT
@@ -1425,8 +1366,10 @@ def _cluster_epoch(
     LAST_REWRITE_BYTES (touched-partition-sized, item 2; keys
     query-prefixed via `meter`). Epochs whose verified-pair set is
     empty skip the iterative CC entirely (identity labels — no merge
-    can happen without a new edge), and quiet state relations skip
-    their version bump inside selective_state_rewrite."""
+    can happen without a new edge); an epoch whose pairs all fall
+    inside one existing root still calls connected_components, with an
+    edgeless graph. Quiet state relations skip their version bump
+    inside selective_state_rewrite."""
     from pyspark.sql import types as T
 
     from .curation_queries import connected_components
@@ -1575,19 +1518,13 @@ def _cluster_epoch(
     comp_del = merged.select(F.col("id").alias("root")).withColumn(
         "pb", _pb(F.col("root"))
     )
-    # The two selective rewrites run OVERLAPPED (r14, guide §2.6): they
-    # write disjoint relations (roots vs comp), read only this epoch's
-    # persisted/checkpointed frames plus their own relation's current
-    # IMMUTABLE version dir, and neither reads what the other writes —
-    # only the driver's serial submission ordered them, at ~2.2 s of
-    # per-epoch wall each (measured, ingest at sf0.1: the pair was 44%
-    # of _cluster_epoch). With `executor`/`pending` (the _index_epoch
-    # protocol) they are SUBMITTED to the caller's pool instead, so the
-    # caller's ledger emission — which reads only this epoch's cached
-    # frames and the CURRENT (untouched) state versions, never the
-    # rewrites' new version dirs — proceeds in their shadow; the caller
-    # joins before unpersisting the epoch's caches (the rewrites read
-    # them) and before the epoch ends.
+    # The two selective rewrites can run OVERLAPPED (r14, guide §2.6):
+    # they write disjoint relations (roots vs comp), read only this
+    # epoch's persisted/checkpointed frames plus their own relation's
+    # current IMMUTABLE version dir, and neither reads what the other
+    # writes — only the driver's serial submission ordered them, at
+    # ~2.2 s of per-epoch wall each (measured, ingest at sf0.1: the
+    # pair was 44% of _cluster_epoch).
     def _rw_roots() -> None:
         wb = selective_state_rewrite(s, roots_root, upserts, ("cfp",))
         LAST_REWRITE_BYTES.setdefault(f"{meter}_roots", []).append(wb)
@@ -1598,13 +1535,11 @@ def _cluster_epoch(
         )
         LAST_REWRITE_BYTES.setdefault(f"{meter}_comp", []).append(wb)
 
-    jobs = [_rw_roots, _rw_comp]
-    if executor is None:
-        _run_concurrent(jobs)
-    else:
-        assert pending is not None, "executor requires a pending list"
-        pending.extend(executor.submit(j) for j in jobs)
-    return hits, [batch_cls, cur, merged, comp_new, st, comp_st]
+    return (
+        hits,
+        [batch_cls, cur, merged, comp_new, st, comp_st],
+        [_rw_roots, _rw_comp],
+    )
 
 
 def _cluster_stream_oracle() -> str:
@@ -1761,53 +1696,29 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull())
         .select("doc_id", "text")
     )
-    from concurrent.futures import ThreadPoolExecutor
-
     root = tempfile.mkdtemp(prefix="cluster_stream_")
-    maint = ThreadPoolExecutor(
-        max_workers=7, thread_name_prefix="cluster-maint"
-    )
     try:
         stage = stage_key_batches(d, root, SK_BATCHES, key="doc_id")
         ip = _index_paths(root)
         roots_root = os.path.join(root, "roots")
         comp_root = os.path.join(root, "comp")
         ledger = os.path.join(root, "ledger")
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, _bid: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int, group) -> None:
             s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
             _assert_batch_membership(batch_df, b)
             flt = batch_df.filter(F.size(words("text")) >= 3).select(
                 "doc_id", "text", F.md5("text").alias("cfp")
             )
-            # Index maintenance (the five append->compact pipelines)
-            # and the two state rewrites OVERLAP the delta-CC epoch
-            # and the ledger emission (r14, guide §2.6): the cluster
-            # step and the emission read only this epoch's
-            # checkpointed/persisted frames and the CURRENT (immutable)
-            # roots/comp versions — never the five index paths or the
-            # rewrites' new version dirs — so the phases were ordered
-            # only by serial driver submission. Everything joins before
-            # the epoch's caches unpersist (the in-flight jobs read
-            # them) and before the epoch ends.
-            pending: list = []
             members_b, new_cls, cp_new, extra, _pbs = _index_epoch(
-                s, b, flt, ip, meter="q_cluster_stream",
-                executor=maint, pending=pending,
+                s, b, flt, ip, "q_cluster_stream", group
             )
-            hits, caches = _cluster_epoch(
+            hits, caches, rewrites = _cluster_epoch(
                 s, b, members_b, new_cls, cp_new, roots_root,
                 comp_root, meter="q_cluster_stream",
-                executor=maint, pending=pending,
             )
+            for job in rewrites:
+                group.submit(job)
             # Ledger append IS the emission (VERDICT r12 item 2): the
             # per-epoch output lands in the sink relation, never a
             # driver list — and this write is the action materializing
@@ -1817,20 +1728,19 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("doc_id").cast("long").alias("doc_id"),
                 F.col("cluster_id").cast("long").alias("cluster_id"),
             ).write.mode("append").parquet(ledger)
-            for f in pending:
-                f.result()
+            # Index maintenance and the two rewrites overlapped the
+            # delta-CC step and this emission (r14, guide §2.6): those
+            # read only this epoch's checkpointed/persisted frames and
+            # the CURRENT (immutable) roots/comp versions — never the
+            # five index paths or the rewrites' new version dirs. The
+            # in-flight jobs read the epoch's caches, so join first.
+            group.join()
             for c in (members_b, new_cls, cp_new, *extra, *caches):
                 c.unpersist()
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "chk"))
-            .start()
+        run_epochs(
+            spark, stage, d.schema, os.path.join(root, "chk"), per_batch
         )
-        q.awaitTermination()
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
         rd = _versioned_read(spark, roots_root)
         LAST_STATE_ROWS["q_cluster_stream_roots"] = (
             rd.count() if rd is not None else 0
@@ -1848,7 +1758,6 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         out = _ledger_result(spark, ledger, schema)
     finally:
-        maint.shutdown(wait=True)
         shutil.rmtree(root, ignore_errors=True)
     return out
 
@@ -1859,33 +1768,13 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quality_classes(batch_df: DataFrame) -> DataFrame:
-    """Quality-passing arrivals with content fingerprints — EXACTLY
-    q_curation_stream's gates (q_corpus_curation's predicates: non-null
-    text, >= 5 words, stopword density >= 0.05, type-token ratio >=
-    0.3), returning (doc_id, text, cfp) ready for _index_epoch. Quality
-    is a pure function of text, so every member of a content class
-    passes or fails together — the capstone's per-class admission is
-    therefore well-defined."""
-    from .text_queries import STOPWORDS
-
-    scored = (
-        batch_df.filter(F.col("text").isNotNull())
-        .select("doc_id", "text", words("text").alias("ws"))
-        .filter(F.size("ws") >= 5)
-    )
-    nw = F.size("ws").cast("long")
-    ns = F.size(
-        F.filter(
-            F.col("ws"),
-            lambda w: w.isin(*[F.lit(x) for x in STOPWORDS]),
-        )
-    ).cast("long")
-    nd = F.size(F.array_distinct("ws")).cast("long")
+    """Arrivals passing _quality_ok — q_curation_stream's gate — with
+    content fingerprints, as (doc_id, text, cfp) ready for
+    _index_epoch. A content class passes or fails as a whole, so the
+    capstone's per-class admission is well-defined."""
     return (
-        scored.filter(
-            (ns.cast("double") / nw >= 0.05)
-            & (nd.cast("double") / nw >= 0.3)
-        )
+        batch_df.select("doc_id", "text", words("text").alias("ws"))
+        .filter(_quality_ok(F.col("ws")))
         .select("doc_id", "text", F.md5("text").alias("cfp"))
     )
 
@@ -2040,53 +1929,35 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("cluster_id", T.LongType()),
         ]
     )
-    from concurrent.futures import ThreadPoolExecutor
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     root = tempfile.mkdtemp(prefix="ingest_stream_")
-    maint = ThreadPoolExecutor(
-        max_workers=7, thread_name_prefix="ingest-maint"
-    )
     try:
         stage = stage_key_batches(d, root, SK_BATCHES, key="doc_id")
         ip = _index_paths(root)
         roots_root = os.path.join(root, "roots")
         comp_root = os.path.join(root, "comp")
         ledger = os.path.join(root, "ledger")
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, _bid: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int, group) -> None:
             s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
             _assert_batch_membership(batch_df, b)
             qp = _quality_classes(batch_df)
-            # Index maintenance overlaps the cluster epoch (r14, guide
-            # §2.6 — see q_cluster_stream's per_batch); joined BEFORE
-            # the rep_map build below, which re-reads (and may race a
-            # compaction of) the classes relation. The cluster epoch's
-            # two rewrites ride a separate pending list: they touch no
-            # index relation, so they keep running in the shadow of
-            # the rep_map scan and the ledger append, joined at epoch
-            # end before the caches they read unpersist.
-            pend_idx: list = []
-            pend_rw: list = []
             members_b, new_cls, cp_new, extra, batch_pbs = _index_epoch(
-                s, b, qp, ip, meter="q_ingest_stream",
-                executor=maint, pending=pend_idx,
+                s, b, qp, ip, "q_ingest_stream", group
             )
-            hits, caches = _cluster_epoch(
+            hits, caches, rewrites = _cluster_epoch(
                 s, b, members_b, new_cls, cp_new, roots_root,
                 comp_root, meter="q_ingest_stream",
-                executor=maint, pending=pend_rw,
             )
-            for f in pend_idx:
-                f.result()
+            # Index maintenance overlapped the delta-CC step (r14, guide
+            # §2.6 — see q_cluster_stream's per_batch); joined BEFORE
+            # the rep_map build below, which re-reads (and may race a
+            # compaction of) the classes relation. The two rewrites
+            # touch no index relation, so they start only now and run
+            # in the shadow of the rep_map scan and the ledger append.
+            group.join()
+            for job in rewrites:
+                group.submit(job)
             # Representative lookup: earlier-epoch classes from the
             # admitted-class state — BUCKET-PRUNED to the batch's cfp
             # buckets (VERDICT r12 item 1: this was the one full
@@ -2130,20 +2001,14 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("cluster_id").cast("long").alias("cluster_id"),
                 )
             ).write.mode("append").parquet(ledger)
-            for f in pend_rw:
-                f.result()
+            # The rewrites read the epoch's caches: join first.
+            group.join()
             for c in (members_b, new_cls, cp_new, *extra, *caches):
                 c.unpersist()
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "chk"))
-            .start()
+        run_epochs(
+            spark, stage, d.schema, os.path.join(root, "chk"), per_batch
         )
-        q.awaitTermination()
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
         LAST_STATE_ROWS["q_ingest_stream_classes"] = _state_count(
             spark, ip["classes"]
         )
@@ -2164,7 +2029,6 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         out = _ledger_result(spark, ledger, schema)
     finally:
-        maint.shutdown(wait=True)
         shutil.rmtree(root, ignore_errors=True)
     return out
 
@@ -2358,27 +2222,14 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             d2 += t * t
         return pd.Series(d2.argmin(1).astype(np.int32))
 
-    from concurrent.futures import ThreadPoolExecutor
-
     root = tempfile.mkdtemp(prefix="semdedup_stream_")
-    maint = ThreadPoolExecutor(
-        max_workers=1, thread_name_prefix="semdedup-maint"
-    )
     try:
         stage = stage_key_batches(e, root, SK_BATCHES, key="vec_id")
         state = os.path.join(root, "classes")
         ledger = os.path.join(root, "ledger")
-        stream = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int, group) -> None:
             s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
             # EAGER localCheckpoint: the assigned batch feeds the
             # class census, the member expansion, and the touched-
             # bucket resolution — materializing once keeps the Arrow
@@ -2412,15 +2263,8 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint(eager=True)
             )
             cl_pbs = _lazy_pbs(bcls, F.col("pb"))
-            # The state append overlaps the emission (r14, guide §2.6):
-            # both read only the eagerly checkpointed epoch frames, the
-            # appended rows carry b_id = b and are invisible to the
-            # emission's b_id < b scan (whose file listing is fixed at
-            # plan build; new files only ever ADD), and the compaction
-            # sweep — the one op that may swap directories under a
-            # reader — stays strictly after the join. has_state is
-            # captured before the submit so the emission guard keeps
-            # its strictly-earlier meaning.
+            # has_state is captured before the append is submitted so
+            # the emission guard keeps its strictly-earlier meaning.
             had_state = b > 0 and _has_state(state)
 
             def _append_classes() -> None:
@@ -2436,7 +2280,7 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     state,
                 )
 
-            app = maint.submit(_append_classes)
+            group.submit(_append_classes)
             if had_state:
                 st = _pruned_scan(
                     s, state, cl_pbs, b,
@@ -2480,7 +2324,14 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("kept_by").cast("long").alias("kept_by"),
                     F.col("cos").cast("double").alias("cos"),
                 ).write.mode("append").parquet(ledger)
-            app.result()
+            # The state append overlapped the emission (r14, guide
+            # §2.6): both read only the eagerly checkpointed epoch
+            # frames, and the appended rows carry b_id = b, invisible
+            # to the emission's b_id < b scan (whose file listing is
+            # fixed at plan build; new files only ever ADD). The
+            # compaction sweep may swap directories under a reader, so
+            # it stays strictly after the join.
+            group.join()
             pbs = (
                 cl_pbs()
                 if _dir_bytes(state) >= PRUNE_MIN_STATE_BYTES
@@ -2490,15 +2341,9 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 s, state, pbs, "q_dedup_semantic_stream_classes_compact"
             )
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_epochs(
+            spark, stage, e.schema, os.path.join(root, "ckpt"), per_batch
         )
-        q.awaitTermination()
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
         LAST_STATE_ROWS["q_dedup_semantic_stream_classes"] = (
             spark.read.parquet(state).count()
             if _has_state(state)
@@ -2506,6 +2351,5 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = _ledger_result(spark, ledger, schema)
     finally:
-        maint.shutdown(wait=True)
         shutil.rmtree(root, ignore_errors=True)
     return out

@@ -25,8 +25,10 @@ from ..registry import register
 from .dedup import words
 from .ir_queries import _TOKS_SQL, _terms_in, BM25_B, BM25_K1, BM25_QUERY
 from .sketch_stream_queries import (
+    LAST_STATE_ROWS,
     SK_BATCHES,
-    run_concurrent,
+    compact_state,
+    run_epochs,
     stage_key_batches,
 )
 
@@ -149,12 +151,7 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage = stage_key_batches(d, root, SK_BATCHES, key="doc_id")
         postings = os.path.join(root, "postings")
         stats_path = os.path.join(root, "stats")
-        from .dedup_stream_queries import (
-            LAST_READ_BYTES,
-            _clear_meters,
-            _meter_read,
-            _pb,
-        )
+        from .dedup_stream_queries import _clear_meters, _meter_read, _pb
 
         _clear_meters("q_index_stream")
         # The serve predicate's term buckets — BM25_QUERY is a run
@@ -169,20 +166,9 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .collect()
         )
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
         log: list[tuple[int, int, int, float]] = []
-        # Explicit epoch counter: an epoch whose prefix serves zero
-        # results appends no log rows, so len(log)-style numbering
-        # would misalign later batches.
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            from .sketch_stream_queries import compact_state
-
+        def per_batch(batch_df: DataFrame, b: int, group) -> None:
             s = batch_df.sparkSession
             toks = batch_df.select(
                 "doc_id", words("text").alias("toks")
@@ -191,13 +177,6 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # dependent on doc_id, so grouping by it is free) — the
             # serve path then never joins a corpus-sized doc-length
             # relation.
-            #
-            # The postings append and the stats merge write DISJOINT
-            # state paths and both read only the micro-batch, so they
-            # run overlapped (r14, guide §2.6); the serve read below
-            # depends on BOTH (its prefix-INCLUSIVE listing must see
-            # this epoch's posting files, its scoring reads the merged
-            # stats), so it stays strictly after the join.
             def _append_postings() -> None:
                 toks.select(
                     "doc_id",
@@ -234,7 +213,15 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 else:
                     batch_stats.write.parquet(stats_path)
 
-            run_concurrent([_append_postings, _merge_stats])
+            group.submit(_append_postings)
+            group.submit(_merge_stats)
+            # The postings append and the stats merge write DISJOINT
+            # state paths and both read only the micro-batch, so they
+            # overlap (r14, guide §2.6); the serve read below depends
+            # on BOTH (its prefix-INCLUSIVE listing must see this
+            # epoch's posting files, its scoring reads the merged
+            # stats), so it stays strictly after the join.
+            group.join()
 
             stats = s.read.parquet(stats_path).select(
                 F.col("n_docs").cast("double").alias("n_docs"),
@@ -304,22 +291,14 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .limit(IX_TOP)
                 .collect()
             )
-            b = epoch[0]
-            epoch[0] += 1
             for i, r in enumerate(
                 sorted(top, key=lambda r: (-r["bm25"], r["doc_id"]))
             ):
                 log.append((b, i + 1, r["doc_id"], r["bm25"]))
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_epochs(
+            spark, stage, d.schema, os.path.join(root, "ckpt"), per_batch
         )
-        q.awaitTermination()
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
         LAST_STATE_ROWS["q_index_stream_stats"] = (
             spark.read.parquet(stats_path).count()
         )
@@ -527,15 +506,9 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         stage = stage_key_batches(e, root, SK_BATCHES, key="vec_id")
         postings = os.path.join(root, "postings")
-        stream = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
         log: list[tuple[int, int, int, float]] = []
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int, _group) -> None:
             s = batch_df.sparkSession
             batch_df.withColumn(
                 "cluster_id", nearest_list(F.col("v"))
@@ -559,20 +532,14 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select("query_id", "neighbor_id", "cos")
                 .collect()
             )
-            b = epoch[0]
-            epoch[0] += 1
             for r in sorted(
                 top, key=lambda r: (r["query_id"], -r["cos"], r["neighbor_id"])
             ):
                 log.append((b, r["query_id"], r["neighbor_id"], r["cos"]))
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_epochs(
+            spark, stage, e.schema, os.path.join(root, "ckpt"), per_batch
         )
-        q.awaitTermination()
     finally:
         shutil.rmtree(root, ignore_errors=True)
     schema = T.StructType(
@@ -719,7 +686,6 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.vector import to_double_array
     from .similarity_queries import _ivf_train
-    from .sketch_stream_queries import compact_state
 
     e = (
         load_table(spark, sf_dir, "embeddings")
@@ -762,18 +728,10 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         stage = stage_key_batches(e, root, SK_BATCHES, key="vec_id")
         state = os.path.join(root, "state")
-        stream = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
         log: list[tuple[int, int, float]] = []
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int, _group) -> None:
             s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
             census = (
                 batch_df.select(
                     nearest_list(F.col("v")).alias("cluster_id")
@@ -834,15 +792,9 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state,
             )
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_epochs(
+            spark, stage, e.schema, os.path.join(root, "ckpt"), per_batch
         )
-        q.awaitTermination()
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
         LAST_STATE_ROWS["q_drift_embed_stream"] = (
             spark.read.parquet(state).count()
         )

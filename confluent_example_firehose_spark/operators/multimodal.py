@@ -3,10 +3,9 @@
 Design (SURVEY-mandated north star): image/audio/video travel as
 `binary` columns with a typed metadata struct alongside; decode /
 feature-extract / resize / frame-sample run as Arrow-batched
-`mapInPandas` stages. The codec libraries (PIL/ffmpeg/etc.) are NOT in
-this container, so the decode kernel itself is stubbed — either a
-clearly-marked NotImplementedError or a deterministic fake — while the
-Spark-side plumbing (schema, batch iteration, partition mapping, UDF
+`mapInPandas` stages. The codec libraries (PIL/ffmpeg/etc.) are not
+dependencies, so the feature kernel is a deterministic fake
+(extract_features' byte-level moments) while the Spark-side plumbing (schema, batch iteration, partition mapping, UDF
 signatures) is real and tested.
 
 Scale notes: mapInPandas streams Arrow record batches — memory is
@@ -66,18 +65,6 @@ def attach_fake_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         F.col(id_col).alias("doc_id"),
         payload.alias("payload"),
         meta.alias("media"),
-    )
-
-
-def decode_image(payload: bytes) -> object:
-    """STUB: real decode needs PIL/turbojpeg (not in this container).
-
-    The mapInPandas plumbing calls extract_features, which uses the
-    deterministic byte-level fake below; swap this in when codecs are
-    available."""
-    raise NotImplementedError(
-        "image decode requires PIL/libjpeg — not available in this "
-        "container; extract_features uses a deterministic byte-level fake"
     )
 
 

@@ -67,38 +67,100 @@ def compact_state(merged: DataFrame, state: str) -> None:
     shutil.rmtree(old)
 
 
+# Width of the one job pool a stream query run owns: the largest
+# in-flight count any kernel reaches (the five index maintenance
+# pipelines plus the two selective state rewrites of q_cluster_stream).
+POOL_WIDTH = 7
+
+
+class OverlapGroup:
+    """Independent driver-submitted jobs (zero-arg callables) overlapped
+    on one small thread pool (guide §2.6 "overlap independent jobs"):
+    Spark happily executes several jobs at once inside one application
+    — the streaming kernels' five state-relation appends, the two
+    selective rewrites, and the staging writer's per-batch files were
+    only sequential because the driver submitted them sequentially, so
+    each tiny job paid its full submit + commit + listing constant
+    back-to-back. FIFO scheduling backfills each job's task tail with
+    the next job's tasks; at 100 TB the overlap hides each write's
+    commit latency behind the others' compute.
+
+    submit(fn) starts a job; join() awaits EVERY job submitted since the
+    last join (no orphaned writes), then re-raises the first failure in
+    submission order. Leaving the `with` block joins and shuts the pool
+    down."""
+
+    def __init__(self) -> None:
+        from concurrent import futures
+
+        self._pool = futures.ThreadPoolExecutor(
+            max_workers=POOL_WIDTH, thread_name_prefix="state-maint"
+        )
+        self._futs: list = []
+
+    def submit(self, fn) -> None:
+        self._futs.append(self._pool.submit(fn))
+
+    def join(self) -> None:
+        futs, self._futs = self._futs, []
+        errs = [e for e in (f.exception() for f in futs) if e is not None]
+        if errs:
+            raise errs[0]
+
+    def __enter__(self) -> "OverlapGroup":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        try:
+            self.join()
+        finally:
+            self._pool.shutdown(wait=True)
+
+
 def run_concurrent(jobs) -> None:
-    """Run independent driver-submitted jobs (zero-arg callables) from
-    a small thread pool and wait for all of them (guide §2.6 "overlap
-    independent jobs"): Spark happily executes several jobs at once
-    inside one application — the streaming kernels' five state-relation
-    appends, the two selective rewrites, and the staging writer's
-    per-batch files were only sequential because the driver submitted
-    them sequentially, so each tiny job paid its full submit + commit +
-    listing constant back-to-back. FIFO scheduling backfills each job's
-    task tail with the next job's tasks; at 100 TB the overlap hides
-    each write's commit latency behind the others' compute. Exceptions:
-    every job is always awaited (no orphaned writes); the first failure
-    (in submission order) is re-raised after all jobs settle."""
+    """Submit every job to a fresh OverlapGroup, then join it; a single
+    job runs inline on the caller's thread (no pool)."""
     jobs = list(jobs)
     if len(jobs) <= 1:
         for fn in jobs:
             fn()
         return
-    from concurrent.futures import ThreadPoolExecutor
+    with OverlapGroup() as group:
+        for fn in jobs:
+            group.submit(fn)
 
-    with ThreadPoolExecutor(
-        max_workers=len(jobs), thread_name_prefix="state-maint"
-    ) as ex:
-        futs = [ex.submit(fn) for fn in jobs]
-        errs = []
-        for f in futs:
+
+def run_epochs(
+    spark: SparkSession, stage: str, schema, ckpt: str, per_batch
+) -> None:
+    """The one epoch loop of the key-batched stream kernels — the
+    reference's poll / handle / endOfSet() flush / commit cycle
+    (`AbstractFirehose.java:113-142`) as one foreachBatch hook. Replays
+    the stage_key_batches files at `stage` as ordered epochs
+    (maxFilesPerTrigger=1 under availableNow, checkpointed at `ckpt`)
+    and calls per_batch(batch_df, b, group) once per epoch. `b` is
+    Spark's batch id: under a fresh checkpoint that is 0..n-1, one per
+    staged file in mtime order, an empty residue file included. `group`
+    is the run's OverlapGroup; whatever the epoch submitted is joined
+    when per_batch returns or raises, so no job outlives its epoch."""
+    with OverlapGroup() as group:
+
+        def epoch(batch_df: DataFrame, batch_id: int) -> None:
             try:
-                f.result()
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-        if errs:
-            raise errs[0]
+                per_batch(batch_df, batch_id, group)
+            finally:
+                group.join()
+
+        (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage)
+            .writeStream.foreachBatch(epoch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
 
 
 def stage_key_batches(
@@ -234,15 +296,10 @@ def q_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage = stage_key_batches(ev, root, SK_BATCHES)
         state = os.path.join(root, "state")
         audit = os.path.join(root, "audit")
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
         log: list[tuple[int, int, bool, bool]] = []
         n_seen = [0]  # running exact distinct count (driver-side sum)
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int, _group) -> None:
             s = batch_df.sparkSession
             batch_df.agg(
                 F.hll_sketch_agg("user_id").alias("sk")
@@ -309,20 +366,16 @@ def q_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             log.append(
                 (
-                    len(log),
+                    b,
                     n_exact,
                     abs(est_merged - est_direct) <= 0.05 * n_exact,
                     abs(est_direct - n_exact) <= 0.05 * n_exact,
                 )
             )
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_epochs(
+            spark, stage, ev.schema, os.path.join(root, "ckpt"), per_batch
         )
-        q.awaitTermination()
         LAST_STATE_ROWS["q_hll_stream"] = spark.read.parquet(state).count()
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -448,14 +501,9 @@ def q_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         stage = stage_key_batches(ev, root, SK_BATCHES)
         state = os.path.join(root, "state")
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
         log: list[tuple[int, int, int, int, int]] = []
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int, _group) -> None:
             s = batch_df.sparkSession
             batch_df.groupBy("bin").agg(
                 F.count("*").alias("cnt")
@@ -469,17 +517,11 @@ def q_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state,
             )
             row = histogram_percentiles(s.read.parquet(state))
-            log.append(
-                (len(log), row["n"], row["p50"], row["p90"], row["p99"])
-            )
+            log.append((b, row["n"], row["p50"], row["p90"], row["p99"]))
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_epochs(
+            spark, stage, ev.schema, os.path.join(root, "ckpt"), per_batch
         )
-        q.awaitTermination()
         LAST_STATE_ROWS["q_quantile_stream"] = (
             spark.read.parquet(state).count()
         )
@@ -587,18 +629,10 @@ def q_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         stage = stage_key_batches(d, root, SK_BATCHES, key="doc_id")
         state = os.path.join(root, "state")
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
         log: list[tuple[int, int, float]] = []
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int, _group) -> None:
             s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
             census = (
                 batch_df.groupBy("bin")
                 .agg(F.count("*").alias("cb"))
@@ -655,13 +689,9 @@ def q_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state,
             )
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_epochs(
+            spark, stage, d.schema, os.path.join(root, "ckpt"), per_batch
         )
-        q.awaitTermination()
         LAST_STATE_ROWS["q_drift_stream"] = (
             spark.read.parquet(state).count()
         )

@@ -135,21 +135,6 @@ def latest_value_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def windowed_counts_stream(
-    events: DataFrame, window: str = "60 seconds", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation: the producer-side 60 s
-    windows the reference consumes pre-computed
-    (FirehoseMetric.java:26-46) — here we PRODUCE them, with late-data
-    tolerance = watermark (state for closed windows is dropped)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-        .select(F.col("w.start").alias("w_start"), "event_type", "n", "sum_value")
-    )
-
-
 def metric_latest_value_stream(metrics: DataFrame) -> DataFrame:
     """Latest-value state table for METRIC_SCHEMA rows — the exact
     gauge-registry key: (metric name, key-sorted filtered label vector)

@@ -17,6 +17,7 @@ from pyspark.sql import Row
 
 from confluent_example_firehose_spark.catalog import (
     _load_table_uncached,
+    _session_uuid,
     load_table,
 )
 
@@ -85,3 +86,24 @@ def test_rewrite_in_place_misses(spark, tmp_path):
     second = load_table(spark, root, "documents")
     assert second is not first
     assert second.count() == 2
+
+
+def test_session_token_fallback_survives_id_reuse():
+    """Without a JVM session UUID the memo key falls back to a token
+    carried by the session wrapper: stable for one wrapper, and never
+    shared by a later wrapper that CPython places at a dead one's
+    id()."""
+
+    class NoJvm:
+        pass
+
+    a = NoJvm()
+    assert _session_uuid(a) == _session_uuid(a)
+    ids, toks = set(), set()
+    for _ in range(20):
+        w = NoJvm()
+        ids.add(id(w))
+        toks.add(_session_uuid(w))
+        del w
+    assert len(ids) < 20  # ids were reused ...
+    assert len(toks) == 20  # ... tokens were not

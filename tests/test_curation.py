@@ -41,6 +41,15 @@ def test_connected_components_long_chain_converges(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_connected_components_empty_node_set(spark):
+    """An empty node set sums to NULL every round; that is a fixpoint,
+    not a failure to converge — empty labels after one round instead
+    of max_iters rounds and a raise."""
+    nodes = spark.createDataFrame([], "id long")
+    edges = spark.createDataFrame([], "src long, dst long")
+    assert connected_components(nodes, edges, max_iters=1).collect() == []
+
+
 def test_morton_key_hand_value(spark):
     # x=3 (bits 0,1), y=5 (bits 0,2) -> z bits 0,1,2,5 -> 0b100111 = 39
     row = (

@@ -567,6 +567,9 @@ def test_bucket_compaction_bounds_files_and_is_output_invariant(
     import os
 
     import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+    from confluent_example_firehose_spark.operators.sketch_stream_queries import (  # noqa: E501
+        OverlapGroup,
+    )
     from pyspark.sql import functions as F
 
     base = [
@@ -584,9 +587,10 @@ def test_bucket_compaction_bounds_files_and_is_output_invariant(
             flt = spark.createDataFrame(
                 rows, "doc_id long, text string"
             ).select("doc_id", "text", F.md5("text").alias("cfp"))
-            mb, nc, cp, extra, _ = m._index_epoch(
-                spark, b, flt, ip, "t_compact"
-            )
+            with OverlapGroup() as group:
+                mb, nc, cp, extra, _ = m._index_epoch(
+                    spark, b, flt, ip, "t_compact", group
+                )
             pair_sets.append(
                 {
                     (r["cfp"], r["other"], round(r["jac"], 6))
@@ -734,7 +738,7 @@ def test_run_concurrent_awaits_all_and_reraises_first():
     import threading
     import time as _t
 
-    import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+    import confluent_example_firehose_spark.operators.sketch_stream_queries as m
 
     ran = []
 
@@ -749,12 +753,102 @@ def test_run_concurrent_awaits_all_and_reraises_first():
         raise RuntimeError("first failure")
 
     with pytest.raises(RuntimeError, match="first failure"):
-        m._run_concurrent([ok("a"), boom, ok("b", 0.05)])
+        m.run_concurrent([ok("a"), boom, ok("b", 0.05)])
     assert sorted(ran) == ["a", "b", "boom"]  # all jobs ran
     # the single-job fast path runs inline (no pool)
     tid = []
-    m._run_concurrent([lambda: tid.append(threading.get_ident())])
+    m.run_concurrent([lambda: tid.append(threading.get_ident())])
     assert tid == [threading.get_ident()]
+
+
+def test_failed_group_job_fails_query_after_siblings_settle(
+    spark, tmp_path, monkeypatch
+):
+    """A job that raises inside an epoch's OverlapGroup fails the
+    stream query with ITS error, but only after the group's other jobs
+    have settled (no write outlives the run), and the kernel's temp
+    root is removed afterwards. q_cluster_stream's two selective
+    rewrites share the epoch-0 group: the comp rewrite fails at once
+    while the roots rewrite is still running."""
+    import os
+    import tempfile
+    import time as _t
+
+    import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+
+    settled = []
+    real = m.selective_state_rewrite
+
+    def rewrite(s, root, *args, **kw):
+        if root.endswith("comp"):
+            raise RuntimeError("comp rewrite failed")
+        _t.sleep(1.0)
+        out = real(s, root, *args, **kw)
+        settled.append(root)
+        return out
+
+    rows = [(i, f"w{i}a w{i}b w{i}c w{i}d") for i in range(8)]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    work = tmp_path / "work"
+    work.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(work))
+    monkeypatch.setattr(m, "selective_state_rewrite", rewrite)
+    with pytest.raises(Exception, match="comp rewrite failed"):
+        query_fns()["q_cluster_stream"](spark, str(tmp_path))
+    assert len(settled) == 1 and settled[0].endswith("roots")
+    assert os.listdir(work) == []
+
+
+def test_dir_bytes_tolerates_live_commits(tmp_path):
+    """_dir_bytes meters a state relation while a sibling pipeline
+    commits into it: a writer's `_temporary/` tree is not counted, and
+    files that vanish mid-walk — a bucket dir renamed away by a
+    compaction swap — are skipped instead of raising
+    FileNotFoundError."""
+    import os
+    import shutil
+    import threading
+    import time as _t
+
+    import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+
+    rel = tmp_path / "rel"
+    (rel / "pb=0").mkdir(parents=True)
+    (rel / "pb=0" / "part-0.parquet").write_bytes(b"x" * 100)
+    (rel / "pb=1").mkdir()
+    for k in range(5):
+        (rel / "pb=1" / f"part-{k}.parquet").write_bytes(b"z" * 10)
+    stop = threading.Event()
+    cycles = [0]
+
+    def committer() -> None:
+        while not stop.is_set():
+            task = rel / "_temporary" / "0" / "task"
+            task.mkdir(parents=True)
+            for k in range(20):
+                (task / f"part-{k}.parquet").write_bytes(b"y" * 10)
+            _t.sleep(0.0005)
+            shutil.rmtree(rel / "_temporary")
+            os.rename(rel / "pb=1", rel / "pb=1.old")
+            _t.sleep(0.0005)
+            os.rename(rel / "pb=1.old", rel / "pb=1")
+            cycles[0] += 1
+
+    t = threading.Thread(target=committer)
+    t.start()
+    seen = set()
+    deadline = _t.monotonic() + 60
+    try:
+        while cycles[0] < 200 and _t.monotonic() < deadline:
+            seen.add(m._dir_bytes(str(rel)))
+    finally:
+        stop.set()
+        t.join(timeout=10)
+    assert not t.is_alive() and cycles[0] >= 200
+    # pb=0 always, plus whatever part of pb=1 the walk caught
+    assert seen <= {100, 110, 120, 130, 140, 150}, seen
 
 
 def test_lazy_pbs_resolves_once_under_concurrency(spark):
