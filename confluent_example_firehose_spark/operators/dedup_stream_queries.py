@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1145,15 +1144,14 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Demo-sized by default so the 4-epoch window can still demonstrate
 # partition selectivity; a 100 TB deployment sizes it so a typical
 # epoch's touched keys hit a small fraction of buckets (thousands of
-# buckets over billions of classes) — SPARK_GRAFT_ROOT_PB is the
-# deploy-time knob (read once at import). The value must stay CONSTANT
-# for the lifetime of a state relation: pb is a pure function of the
-# probe key and the bucket count, so changing it across epochs of one
-# run would route probes to the wrong partitions. Every registered
-# query builds its state in a per-run temp root, so a per-process env
-# setting is always safe; tools/ingest_footprint_probe.py raises it to
-# measure pruning at a realistic state-to-batch ratio.
-ROOT_PB = int(os.environ.get("SPARK_GRAFT_ROOT_PB", "32"))
+# buckets over billions of classes). The value must stay CONSTANT for
+# the lifetime of a state relation: pb is a pure function of the probe
+# key and the bucket count, so changing it across epochs of one run
+# would route probes to the wrong partitions. Every registered query
+# builds its state in a per-run temp root, so rebinding the module
+# attribute between runs is safe; tools/ingest_footprint_probe.py sets
+# ROOT_PB to measure pruning at a realistic state-to-batch ratio.
+ROOT_PB = 32
 
 # Per-epoch bytes physically written by each selective state rewrite of
 # the last cluster/ingest/curation run, keyed f"{query}_{relation}"
@@ -2175,11 +2173,15 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
     from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
     from ..functions.vector import cosine, to_double_array
     from .index_stream_queries import IVF_STREAM_SAMPLE
-    from .similarity_queries import SEM_TAU, _ivf_train, _sem_k
+    from .similarity_queries import (
+        SEM_TAU,
+        _ivf_train,
+        _sem_k,
+        ivf_assign_udf,
+    )
 
     _clear_meters("q_dedup_semantic_stream")
     schema = T.StructType(
@@ -2209,18 +2211,7 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame([], schema)
     cents = _ivf_train(sample, k=_sem_k(n_shard))
     cents_b = spark.sparkContext.broadcast(cents)
-
-    @pandas_udf("int")
-    def nearest_list(vs: pd.Series) -> pd.Series:
-        # Inlined dim-sequential fold (worker self-containment; bit-
-        # identical to the oracle's list_reduce).
-        c = cents_b.value
-        x = np.stack(vs.to_numpy())
-        d2 = np.zeros((x.shape[0], c.shape[0]))
-        for i in range(c.shape[1]):
-            t = x[:, i, None] - c[None, :, i]
-            d2 += t * t
-        return pd.Series(d2.argmin(1).astype(np.int32))
+    nearest_list = ivf_assign_udf(cents_b)
 
     root = tempfile.mkdtemp(prefix="semdedup_stream_")
     try:

@@ -15,7 +15,6 @@ rescanning history.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -445,7 +444,6 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
     from ..functions.vector import cosine, to_double_array
     from .similarity_queries import (
@@ -454,6 +452,7 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         TOP_K,
         _ivf_train,
         _seq_sqdist,
+        ivf_assign_udf,
     )
 
     e = (
@@ -476,18 +475,7 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     cents = _ivf_train(sample)
     cents_b = spark.sparkContext.broadcast(cents)
-
-    @pandas_udf("int")
-    def nearest_list(vs: pd.Series) -> pd.Series:
-        # Inlined dim-sequential fold (q_similarity_ivf's worker-safe
-        # kernel shape): bit-identical to the oracle's list_reduce.
-        c = cents_b.value
-        x = np.stack(vs.to_numpy())
-        d2 = np.zeros((x.shape[0], c.shape[0]))
-        for i in range(c.shape[1]):
-            t = x[:, i, None] - c[None, :, i]
-            d2 += t * t
-        return pd.Series(d2.argmin(1).astype(np.int32))
+    nearest_list = ivf_assign_udf(cents_b)
 
     # Fixed external query workload: probe lists from centroids only
     # (no prefix dependence), stable-sorted like the oracle's
@@ -682,10 +670,9 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
     from ..functions.vector import to_double_array
-    from .similarity_queries import _ivf_train
+    from .similarity_queries import _ivf_train, ivf_assign_udf
 
     e = (
         load_table(spark, sf_dir, "embeddings")
@@ -712,17 +699,7 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame([], schema)
     cents = _ivf_train(sample)
     cents_b = spark.sparkContext.broadcast(cents)
-
-    @pandas_udf("int")
-    def nearest_list(vs: pd.Series) -> pd.Series:
-        # Inlined dim-sequential fold (worker self-containment).
-        c = cents_b.value
-        x = np.stack(vs.to_numpy())
-        d2 = np.zeros((x.shape[0], c.shape[0]))
-        for i in range(c.shape[1]):
-            t = x[:, i, None] - c[None, :, i]
-            d2 += t * t
-        return pd.Series(d2.argmin(1).astype(np.int32))
+    nearest_list = ivf_assign_udf(cents_b)
 
     root = tempfile.mkdtemp(prefix="embed_drift_stream_")
     try:

@@ -234,6 +234,28 @@ def _seq_sqdist(x: np.ndarray, c: np.ndarray) -> np.ndarray:
     return d2
 
 
+def ivf_assign_udf(cents_b):
+    """Arrow-batched IVF list assignment: the nearest broadcast centroid
+    (`cents_b`) per vector under _seq_sqdist's dim-sequential fold, so
+    the oracles' list_reduce sees bit-identical distances. The fold is
+    INLINED, not a call to _seq_sqdist: the nested UDF pickles by value,
+    while a module-global reference pickles by name and breaks on
+    workers whose cwd can't import the package. _seq_sqdist stays
+    module-level for the oracle builder and the unit tests."""
+
+    @pandas_udf("int")
+    def nearest_list(vs: pd.Series) -> pd.Series:
+        c = cents_b.value
+        x = np.stack(vs.to_numpy())
+        d2 = np.zeros((x.shape[0], c.shape[0]))
+        for i in range(c.shape[1]):
+            t = x[:, i, None] - c[None, :, i]
+            d2 += t * t
+        return pd.Series(d2.argmin(1).astype(np.int32))
+
+    return nearest_list
+
+
 def _ivf_oracle():
     """Centroid-literal oracle for q_similarity_ivf (VERDICT r5 item 2,
     the q_similarity_lsh plane-literal recipe). Centroids are
@@ -352,24 +374,7 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     cents = _ivf_train(sample)
     cents_b = spark.sparkContext.broadcast(cents)
-
-    @pandas_udf("int")
-    def nearest_list(vs: pd.Series) -> pd.Series:
-        # Vectorized per Arrow batch (VERDICT r4 item 4), but with the
-        # dim-sequential accumulation of _seq_sqdist so the oracle's
-        # list_reduce fold sees bit-identical distances. The fold is
-        # INLINED, not a call to the module-level _seq_sqdist: a
-        # module-global reference pickles by name and breaks on
-        # workers whose cwd can't import the package (the driver runs
-        # from its own directory); _seq_sqdist stays module-level for
-        # the unit tests and the oracle builder.
-        c = cents_b.value
-        x = np.stack(vs.to_numpy())
-        d2 = np.zeros((x.shape[0], c.shape[0]))
-        for i in range(c.shape[1]):
-            t = x[:, i, None] - c[None, :, i]
-            d2 += t * t
-        return pd.Series(d2.argmin(1).astype(np.int32))
+    nearest_list = ivf_assign_udf(cents_b)
 
     listed = e.withColumn("cluster_id", nearest_list(F.col("v")))
     # queries probe their NPROBE nearest lists (stable sort: ties on
@@ -920,18 +925,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     cents = _ivf_train(sample, k=_sem_k(n_all))
     cents_b = spark.sparkContext.broadcast(cents)
-
-    @pandas_udf("int")
-    def nearest_list(vs: pd.Series) -> pd.Series:
-        # _seq_sqdist's fold inlined for worker self-containment (see
-        # q_similarity_ivf's nearest_list comment).
-        c = cents_b.value
-        x = np.stack(vs.to_numpy())
-        d2 = np.zeros((x.shape[0], c.shape[0]))
-        for i in range(c.shape[1]):
-            t = x[:, i, None] - c[None, :, i]
-            d2 += t * t
-        return pd.Series(d2.argmin(1).astype(np.int32))
+    nearest_list = ivf_assign_udf(cents_b)
 
     # Persisted: BOTH sides of the within-cluster self-join read the
     # assignment, and the O(n*k) distance UDF is the dominant cost —
@@ -1080,17 +1074,7 @@ def q_dedup_embed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     cents = _ivf_train(sample, k=_sem_k(n_corpus))
     cents_b = spark.sparkContext.broadcast(cents)
-
-    @pandas_udf("int")
-    def nearest_list(vs: pd.Series) -> pd.Series:
-        # inlined fold — worker self-containment (see q_similarity_ivf)
-        c = cents_b.value
-        x = np.stack(vs.to_numpy())
-        d2 = np.zeros((x.shape[0], c.shape[0]))
-        for i in range(c.shape[1]):
-            t = x[:, i, None] - c[None, :, i]
-            d2 += t * t
-        return pd.Series(d2.argmin(1).astype(np.int32))
+    nearest_list = ivf_assign_udf(cents_b)
 
     b = batch.select(
         nearest_list(F.col("v")).alias("cluster_id"), "vec_id", "v"

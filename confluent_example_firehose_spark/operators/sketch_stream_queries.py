@@ -28,6 +28,7 @@ from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
 from ..registry import register
+from ..streaming.pipeline import drain
 from .index_queries import QH_BIN_CENTS
 
 SK_BATCHES = 4  # micro-batches, matching BLOOM_BATCHES / CMS_BATCHES
@@ -137,7 +138,7 @@ def run_epochs(
     reference's poll / handle / endOfSet() flush / commit cycle
     (`AbstractFirehose.java:113-142`) as one foreachBatch hook. Replays
     the stage_key_batches files at `stage` as ordered epochs
-    (maxFilesPerTrigger=1 under availableNow, checkpointed at `ckpt`)
+    (maxFilesPerTrigger=1, run by streaming.pipeline.drain on `ckpt`)
     and calls per_batch(batch_df, b, group) once per epoch. `b` is
     Spark's batch id: under a fresh checkpoint that is 0..n-1, one per
     staged file in mtime order, an empty residue file included. `group`
@@ -151,15 +152,12 @@ def run_epochs(
             finally:
                 group.join()
 
-        (
+        drain(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(epoch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+            .parquet(stage),
+            ckpt,
+            epoch,
         )
 
 

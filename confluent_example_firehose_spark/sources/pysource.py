@@ -38,6 +38,7 @@ GEN_SERIES = 100  # distinct user series
 GEN_TYPES = ("click", "view", "purchase", "scroll")
 STREAM_N = 5_000  # streaming records total
 STREAM_BATCH = 1_000  # records per micro-batch
+STREAM_DEADLINE_S = 90  # hard stop for the streaming drain wait
 
 _TYPES_SQL = (
     "CASE i % 4 WHEN 0 THEN 'click' WHEN 1 THEN 'view' "
@@ -222,9 +223,7 @@ def q_pysource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="1 second")
         .start()
     )
-    deadline = time.time() + int(
-        os.environ.get("FIREHOSE_PYSRC_DEADLINE_S", "90")
-    )
+    deadline = time.time() + STREAM_DEADLINE_S
     try:
         while time.time() < deadline:
             if spark.table(name).count() >= n:

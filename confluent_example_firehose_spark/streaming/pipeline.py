@@ -22,6 +22,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.firehose import (
+    label_values,
+    labels,
+    last_value_table,
+    parse_metrics,
+    series_key,
+)
+
 
 # The reference's consumer tuning (Configs.java:28-37), mapped onto
 # Spark's Kafka source options.
@@ -56,8 +64,6 @@ def kafka_metric_stream(
 
     Byte[] value -> from_json against METRIC_SCHEMA with the permissive
     skip (AbstractFirehose.java:98-105,118-123)."""
-    from ..operators.firehose import parse_metrics
-
     raw = (
         spark.readStream.format("kafka")
         .options(**kafka_source_options(bootstrap, **overrides))
@@ -123,15 +129,52 @@ def file_event_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     )
 
 
+def drain(
+    stream: DataFrame, ckpt: str, per_batch, mode: str = "append"
+) -> None:
+    """Run `stream` through per_batch(batch_df, batch_id) until its
+    available input is consumed: the reference's poll / handle /
+    endOfSet() flush / commit cycle (AbstractFirehose.java:113-142) as
+    one availableNow foreachBatch query checkpointed at `ckpt`.
+
+    Replay law: a batch commits only after per_batch returns. If
+    per_batch raises, drain raises, and the next drain from `ckpt`
+    re-delivers that batch under the same batch id before any later
+    one, so a sink keyed on batch_id (batch_id_sink) is exactly-once."""
+    (
+        stream.writeStream.outputMode(mode)
+        .foreachBatch(per_batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def batch_id_sink(out: str):
+    """Idempotent foreachBatch parquet sink for drain: each batch
+    overwrites its own `out/batch_id=N` directory, so a replayed batch
+    rewrites the same directory instead of duplicating rows."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(out, f"batch_id={batch_id}")
+        )
+
+    return write_batch
+
+
 def latest_value_stream(events: DataFrame) -> DataFrame:
     """Streaming keyed latest-value state (the gauge cache twin,
-    AbstractPrometheusFirehose.java:41-51): groupBy + max_by in update
+    AbstractPrometheusFirehose.java:41-51): last_value_table in update
     mode. State store holds one row per series — the streaming
     equivalent of the 10k-gauge cache."""
-    return events.groupBy("user_id", "event_type").agg(
-        F.max_by("value", F.struct("ts", "event_id")).alias("last_value"),
-        F.max("ts").alias("last_ts"),
-        F.count(F.lit(1)).alias("n_events"),
+    return last_value_table(
+        events,
+        ["user_id", "event_type"],
+        "value",
+        ["ts", "event_id"],
+        extra_aggs={"n_events": F.count(F.lit(1))},
     )
 
 
@@ -140,8 +183,6 @@ def metric_latest_value_stream(metrics: DataFrame) -> DataFrame:
     gauge-registry key: (metric name, key-sorted filtered label vector)
     (AbstractPrometheusFirehose.java:42,48). Works identically on a
     batch or streaming metrics DataFrame (same Catalyst plan)."""
-    from ..operators.firehose import label_values, labels, series_key
-
     keyed = metrics.select(
         F.col("name"),
         series_key("name", "tags").alias("series"),
@@ -152,16 +193,20 @@ def metric_latest_value_stream(metrics: DataFrame) -> DataFrame:
         F.col("value"),
         F.col("id"),
     )
-    return keyed.groupBy("name", "series").agg(
-        F.max_by("value", F.struct("ts", "id")).alias("last_value"),
-        F.max("ts").alias("last_ts"),
-        F.first("component").alias("component"),  # gauge namespace,
-        # AbstractPrometheusFirehose.java:53-63
-        # labels/label_values are functions of the series key (key-
-        # sorted), so first() is deterministic per group.
-        F.first("labels").alias("labels"),
-        F.first("label_values").alias("label_values"),
-        F.count(F.lit(1)).alias("n_events"),
+    return last_value_table(
+        keyed,
+        ["name", "series"],
+        "value",
+        ["ts", "id"],
+        extra_aggs={
+            # gauge namespace, AbstractPrometheusFirehose.java:53-63
+            "component": F.first("component"),
+            # labels/label_values are functions of the series key (key-
+            # sorted), so first() is deterministic per group.
+            "labels": F.first("labels"),
+            "label_values": F.first("label_values"),
+            "n_events": F.count(F.lit(1)),
+        },
     )
 
 

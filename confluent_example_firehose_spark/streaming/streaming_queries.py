@@ -34,6 +34,8 @@ from pyspark.sql import types as T
 from ..operators.relational import dsum, dsum_sql
 from ..registry import register
 from .pipeline import (
+    batch_id_sink,
+    drain,
     file_event_stream,
     latest_value_stream,
     stage_event_files,
@@ -136,13 +138,7 @@ def q_microbatch_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
         epochs.append((epoch_id, batch_df.count()))
 
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, os.path.join(root, "ckpt"), per_batch)
     schema = T.StructType(
         [
             T.StructField("n_epochs", T.LongType()),
@@ -221,14 +217,7 @@ def q_sink_push(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _few_partitions(spark):
         stream = _staged_events(spark, sf_dir, root)
         agg = latest_value_stream(stream)
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(agg, os.path.join(root, "ckpt"), per_batch, "update")
     return spark.createDataFrame(_replay_pushes(pushed), _PUSH_STATE_SCHEMA)
 
 
@@ -336,6 +325,9 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("event_type").agg(F.count("*").alias("n_kept"))
 
 
+_TTL_SMOKE_DEADLINE_S = 60  # q_stateful_ttl's eviction-wait hard stop
+
+
 @register("q_stateful_ttl", oracle=None)
 def q_stateful_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed state with idle-TTL eviction (operator #7, the Guava
@@ -365,9 +357,7 @@ def q_stateful_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         # only costs time on a genuinely stuck run (ADVICE r2: 25 s
         # flaked on loaded boxes — 2 s TTL + timeout-drain batches can
         # take longer to surface).
-        deadline = time.time() + int(
-            os.environ.get("FIREHOSE_TTL_SMOKE_DEADLINE_S", "60")
-        )
+        deadline = time.time() + _TTL_SMOKE_DEADLINE_S
         while time.time() < deadline:
             n_evicted = (
                 spark.table(name).filter(F.col("evicted")).limit(1).count()
@@ -503,14 +493,14 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _workdir()
     with _few_partitions(spark):
         stream = _staged_events(spark, sf_dir, root)
-        out = _stream_join_run(stream, root)
+        out = _stream_join_run(stream, root, "inner")
     return out.groupBy("c_user").agg(
         F.count("*").alias("n_attributed"),
         dsum("p_value").alias("attributed_value"),
     )
 
 
-def _stream_join_run(stream: DataFrame, root: str) -> DataFrame:
+def _stream_join_run(stream: DataFrame, root: str, how: str) -> DataFrame:
     clicks = (
         stream.filter(F.col("event_type") == "click")
         .select(
@@ -534,6 +524,7 @@ def _stream_join_run(stream: DataFrame, root: str) -> DataFrame:
         (F.col("c_user") == F.col("p_user"))
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
     )
     return _run_to_memory(joined, root, "append")
 
@@ -601,32 +592,7 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _workdir()
     with _few_partitions(spark):
         stream = _staged_events(spark, sf_dir, root)
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
-                F.col("event_id").alias("c_id"),
-            )
-            .withWatermark("c_ts", "30 minutes")
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-                F.col("value").alias("p_value"),
-            )
-            .withWatermark("p_ts", "30 minutes")
-        )
-        joined = clicks.join(
-            purchases,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("p_ts") >= F.col("c_ts"))
-            & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
-            "leftOuter",
-        )
-        out = _run_to_memory(joined, root, "append")
+        out = _stream_join_run(stream, root, "leftOuter")
     return out.groupBy("c_user").agg(
         F.count(F.col("p_value")).alias("n_matched"),
         F.sum(F.col("p_value").isNull().cast("long")).alias("n_unmatched"),
@@ -779,18 +745,14 @@ def q_sink_push_http(spark: SparkSession, sf_dir: str) -> DataFrame:
             agg = latest_value_stream(stream)
             host, port = server.server_address[:2]
             push = gateway_push_fn(f"{host}:{port}", "firehose-smoke")
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(
-                    lambda batch_df, epoch_id: push(
-                        to_prometheus_text(batch_df), epoch_id
-                    )
-                )
-                .option("checkpointLocation", os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+            drain(
+                agg,
+                os.path.join(root, "ckpt"),
+                lambda batch_df, epoch_id: push(
+                    to_prometheus_text(batch_df), epoch_id
+                ),
+                "update",
             )
-            q.awaitTermination()
     finally:
         server.shutdown()
         server.server_close()
@@ -823,19 +785,7 @@ def q_sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(root, "sink")
     with _few_partitions(spark):
         stream = _staged_events(spark, sf_dir, root)
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(out, f"batch_id={batch_id}")
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(stream, os.path.join(root, "ckpt"), batch_id_sink(out))
     back = spark.read.option("basePath", out).parquet(out + "/batch_id=*")
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -888,26 +838,14 @@ def q_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.move(path, dst)  # preserves mtime: replay order keeps
         held.append((dst, path))
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out, f"batch_id={batch_id}")
-        )
-
-    def drain() -> None:
-        q = (
-            file_event_stream(spark, src)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    sink = batch_id_sink(out)
     with _few_partitions(spark):
-        drain()  # phase A: first half of the files, then clean stop
+        # phase A: first half of the files, then clean stop
+        drain(file_event_stream(spark, src), ckpt, sink)
         for dst, path in held:
             shutil.move(dst, path)  # the "late" files arrive
-        drain()  # phase B: NEW query, same checkpoint — must resume
+        # phase B: NEW query, same checkpoint — must resume
+        drain(file_event_stream(spark, src), ckpt, sink)
     back = spark.read.option("basePath", out).parquet(out + "/batch_id=*")
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"),

@@ -3,6 +3,11 @@ latest-value registry, and the Prometheus text renderer."""
 
 from __future__ import annotations
 
+import os
+import sys
+
+import pytest
+
 from confluent_example_firehose_spark.registry import query_fns
 from confluent_example_firehose_spark.streaming.sinks import to_prometheus_text
 
@@ -61,6 +66,7 @@ def test_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
     import shutil
 
     from confluent_example_firehose_spark.streaming.pipeline import (
+        drain,
         stage_event_files,
     )
 
@@ -81,15 +87,7 @@ def test_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(str(indir))
         )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, epoch: counts.append(df.count())
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(stream, ckpt, lambda df, epoch: counts.append(df.count()))
 
     for p in parts[:2]:
         shutil.copy(p, indir)
@@ -103,6 +101,100 @@ def test_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
 
     assert len(first) == 2 and len(second) == 2  # no re-processing
     assert sum(first) + sum(second) == total_rows
+
+
+def test_drain_replays_failed_batch_under_same_id(spark, sf_dir, tmp_path):
+    """drain's replay law: a batch whose per_batch raised is never
+    committed, so drain raises and the next drain from the same
+    checkpoint re-delivers that batch id before any later one. The
+    failure lands after batch_id_sink wrote batch 1 (a crash between
+    sink write and commit); the replay overwrites the same batch_id=1
+    directory, so the rescan holds every staged row exactly once."""
+    from pyspark.errors import StreamingQueryException
+
+    from confluent_example_firehose_spark.streaming.pipeline import (
+        batch_id_sink,
+        drain,
+        file_event_stream,
+        stage_event_files,
+    )
+
+    staged = str(tmp_path / "staged")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "sink")
+    stage_event_files(spark, sf_dir, staged, n_files=4)
+    sink = batch_id_sink(out)
+
+    first: list[int] = []
+
+    def fail_on_batch_1(batch_df, batch_id: int) -> None:
+        first.append(batch_id)
+        sink(batch_df, batch_id)
+        if batch_id == 1:
+            raise RuntimeError("injected failure after the batch 1 write")
+
+    with pytest.raises(StreamingQueryException, match="injected failure"):
+        drain(file_event_stream(spark, staged), ckpt, fail_on_batch_1)
+    assert first == [0, 1]
+
+    second: list[int] = []
+
+    def record(batch_df, batch_id: int) -> None:
+        second.append(batch_id)
+        sink(batch_df, batch_id)
+
+    drain(file_event_stream(spark, staged), ckpt, record)
+    # 4 data files + the empty flush file -> batch ids 0..4; batch 1
+    # comes back first, batch 0 never does.
+    assert second == [1, 2, 3, 4]
+    back = spark.read.option("basePath", out).parquet(out + "/batch_id=*")
+    assert back.count() == spark.read.parquet(staged).count()
+
+
+def _table_hash():
+    tools = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
+    )
+    sys.path.insert(0, tools)
+    try:
+        from check_oracle import table_hash
+    finally:
+        sys.path.remove(tools)
+    return table_hash
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_sink_push",
+        "q_sink_push_http",
+        "q_sink_foreachbatch",
+        "q_stream_join",
+        "q_stream_join_outer",
+    ],
+)
+def test_drain_queries_match_oracle(spark, sf_dir, name):
+    """The drain-based stream queries hash-equal their registered
+    DuckDB oracles (tools/check_oracle.py's value hash)."""
+    import duckdb
+
+    from confluent_example_firehose_spark.registry import all_queries
+    from confluent_example_firehose_spark.schema import TABLE_NAMES
+
+    table_hash = _table_hash()
+    spec = all_queries()[name]
+    sdf = spec.fn(spark, sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    res = con.execute(spec.oracle_sql())
+    ocols = [d[0] for d in res.description]
+    orows = res.fetchall()
+    con.close()
+    assert sorted(sdf.columns) == sorted(ocols)
+    assert len(srows) == len(orows) > 0
+    assert table_hash(srows, sdf.columns) == table_hash(orows, ocols)
 
 
 def test_event_time_ttl_hand_verified(spark, tmp_path):

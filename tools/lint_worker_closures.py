@@ -16,7 +16,12 @@ imports (numpy, pandas) are fine — they are installed; constants
 This walks every module in the package, finds nested functions that
 look worker-bound, and flags reads of package-module-level
 functions/classes. Keep kernels self-contained: inline the helper in
-the nested fn (keep a module-level twin for unit tests).
+the nested fn (keep a module-level twin for unit tests). To share one
+kernel across queries without a module-global reference, build it in a
+module-level factory that returns the nested fn, and call the factory
+on the driver: `similarity_queries.ivf_assign_udf(cents_b)` returns
+the IVF assignment pandas_udf this way (the nested fn and its captured
+broadcast ship to workers by value; the factory itself never does).
 
 Usage: python tools/lint_worker_closures.py   # exits 1 on findings
 """
